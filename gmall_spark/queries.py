@@ -79,32 +79,13 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 _MATERIALIZED: dict[tuple[str, str, str], DataFrame] = {}
 
 
-_INLINE_CONF = "spark.sql.optimizer.collapseProjectAlwaysInline"
-
-
 def _materialized(name: str, spark: SparkSession, sf_dir: str, build) -> DataFrame:
     key = (spark.sparkContext.applicationId, sf_dir, name)
     df = _MATERIALIZED.get(key)
     if df is None:
         df = build().persist()
         _MATERIALIZED[key] = df
-        # Materialize eagerly with forced Project collapsing: the CDC
-        # envelope builds map(k1,v1,...)[k] chains that CollapseProject
-        # normally refuses to inline (the map column is referenced 10+
-        # times), which keeps SimplifyExtractValueOps from deleting the
-        # map construction entirely — measured ~2x on the order-detail
-        # build. Safe here: duplicated from_json/cast copies dedupe in
-        # whole-stage-codegen subexpression elimination (measured
-        # neutral for page_log), and the flag is scoped to this one
-        # action so per-row HOF pipelines (simhash, minhash lanes)
-        # never see it — global inlining is exactly what caused the r1
-        # minhash 16x re-hash pathology.
-        prev = spark.conf.get(_INLINE_CONF, "false")
-        spark.conf.set(_INLINE_CONF, "true")
-        try:
-            df.count()
-        finally:
-            spark.conf.set(_INLINE_CONF, prev)
+        df.count()
     return df
 
 
@@ -152,6 +133,9 @@ def clear_cache() -> None:
     queries_llm._FROZEN_LM.clear()
     queries_llm._FROZEN_KN.clear()
     queries_llm.incontext._SEM_CHAIN.clear()
+    from gmall_spark.functions import vectors as _vectors
+
+    _vectors._FOLD_COLS.clear()
     # scan-fanout decisions are keyed by file paths; the driver
     # regenerates testdata at the same paths between rounds (ADVICE r3)
     session._SCAN_DECISIONS.clear()

@@ -40,7 +40,12 @@ BASE_DIC_ROWS: list[tuple[str, str]] = [
 
 
 def base_dic(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(BASE_DIC_ROWS, "dic_code string, dic_name string")
+    """The dictionary as a local relation, planned on the driver.
+
+    ``createDataFrame(list)`` would build a pickled Python RDD, so
+    every evaluation would start Python-worker tasks for 20 rows.
+    """
+    return spark.sql(f"SELECT * FROM {base_dic_values_sql()}")
 
 
 def base_dic_values_sql() -> str:

@@ -18,8 +18,9 @@ answers to the reference's hand-rolled JDBC machinery:
   micro-batch — batching comes from the micro-batch itself, not a
   hand-rolled row buffer.
 - S11 generic query->rows (utils/JdbcUtil.java:21-66, reflection +
-  snake->camel): ``spark.read.jdbc`` with a pushed-down query; column
-  naming stays declarative (``alias``), no reflection.
+  snake->camel) needs no adapter: ``spark.read.jdbc`` takes a
+  pushed-down ``(<query>) AS q`` as its table; column naming stays
+  declarative (``alias``), no reflection.
 
 No database ships in the test container, so these adapters are
 exercised indirectly: their parquet twins (same call shape, swapped
@@ -47,16 +48,6 @@ def read_lookup(
     in ``F.broadcast`` at the join site.
     """
     return spark.read.jdbc(url, table, properties=properties or {})
-
-
-def read_query(
-    spark: SparkSession,
-    url: str,
-    query: str,
-    properties: dict[str, str] | None = None,
-) -> DataFrame:
-    """Generic pushed-down JDBC query (S11)."""
-    return spark.read.jdbc(url, f"({query}) AS q", properties=properties or {})
 
 
 def sink_projection(batch_df: DataFrame, transient_cols: Sequence[str] = ()) -> DataFrame:

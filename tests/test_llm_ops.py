@@ -438,6 +438,20 @@ def test_clear_cache_releases_everything(spark, sf_dir):
     assert queries.QUERIES["similarity_ivf_topk"](spark, sf_dir).count() > 0
 
 
+def test_clear_cache_drains_vector_fold_memo(spark):
+    """The named-column cosine/dot/norm memo is session-keyed like the
+    other memos, so clear_cache must drain it too."""
+    from gmall_spark import queries
+    from gmall_spark.functions import vectors
+
+    vectors.cosine("a", "b")
+    vectors.norm("a")
+    assert vectors._FOLD_COLS
+
+    queries.clear_cache()
+    assert not vectors._FOLD_COLS
+
+
 # --- transitive grouping (connected components) ---------------------------
 
 

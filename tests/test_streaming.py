@@ -1228,6 +1228,86 @@ def test_checkpoint_restart_resumes_without_reprocessing(spark, tmpdir):
     assert got == list(range(15)), got  # no b1 duplicates, b2 present
 
 
+def test_windowed_agg_restart_resumes_window_state(spark, tmpdir):
+    """The stateful counterpart of the restart test above: a windowed
+    aggregation drains half of the files into a parquet sink, stops,
+    and restarts on the same checkpoint after the rest arrive. The
+    windows still open at the stop live only in the state-store
+    deltas (window [40 s, 50 s) takes rows from files 2 and 3). When
+    every closed window equals batch ``tumble_agg`` and no window is
+    written twice, the state was restored, not rebuilt."""
+    import os
+
+    src = f"{tmpdir}/wrestart_src"
+    staging = f"{tmpdir}/wrestart_staging"
+    sink = f"{tmpdir}/wrestart_sink"
+    ckpt = f"{tmpdir}/wrestart_ckpt"
+    os.makedirs(src, exist_ok=True)
+    base_ms = 1_700_000_000_000  # aligned to the 10 s windows
+    n_files, rows_per_file = 6, 30
+
+    def add_file(i):
+        # file i holds event seconds [15 i, 15 i + 15): each file moves
+        # the 5 s watermark past the previous one without late rows
+        spark.range(rows_per_file).select(
+            F.timestamp_millis(F.lit(base_ms + 15_000 * i) + F.col("id") * 500).alias("rt"),
+            (F.col("id") % 3).alias("k"),
+            F.col("id").alias("v"),
+        ).coalesce(1).write.mode("overwrite").parquet(staging)
+        part = next(f for f in os.listdir(staging) if f.endswith(".parquet"))
+        dst = f"{src}/f{i}.parquet"
+        os.rename(f"{staging}/{part}", dst)
+        mtime = 1_600_000_000 + i  # the file source orders by mtime
+        os.utime(dst, (mtime, mtime))
+
+    def aggs():
+        return [
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+            F.sum("v").cast("bigint").alias("v_sum"),
+        ]
+
+    def drain():
+        stream = spark.readStream.schema("rt timestamp, k bigint, v bigint").option(
+            "maxFilesPerTrigger", 1
+        ).parquet(src)
+        agg = runner.windowed_agg_stream(stream, "rt", "5 seconds", 10, ["k"], aggs())
+        q = (
+            agg.writeStream.format("parquet")
+            .outputMode("append")
+            .option("path", sink)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        assert q.exception() is None, q.exception()
+
+    for i in range(n_files // 2):
+        add_file(i)
+    drain()
+    first = spark.read.parquet(sink).count()
+    for i in range(n_files // 2, n_files):
+        add_file(i)
+    drain()  # restart from the same checkpoint
+
+    got = [
+        (r.stt, r.edt, r.k, r.n, r.v_sum) for r in spark.read.parquet(sink).collect()
+    ]
+    keys = [g[:3] for g in got]
+    assert len(keys) == len(set(keys)), "a window was written twice"
+    # append mode emits exactly the windows the final watermark closed
+    last_event_ms = base_ms + 15_000 * (n_files - 1) + (rows_per_file - 1) * 500
+    watermark_ms = last_event_ms - 5_000
+    expected = {
+        (r.stt, r.edt, r.k, r.n, r.v_sum)
+        for r in tumble_agg(spark.read.parquet(src), "rt", 10, ["k"], aggs())
+        .filter(F.unix_millis(F.to_timestamp("edt")) <= watermark_ms)
+        .collect()
+    }
+    assert 0 < first < len(expected), (first, len(expected))
+    assert set(got) == expected
+
+
 @pytest.mark.slow
 def test_purge_doc_ids_removes_from_every_store(spark, sf_dir, tmpdir):
     """Takedown propagation: after purging a doc involved in verified
